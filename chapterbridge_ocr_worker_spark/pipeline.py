@@ -4,30 +4,32 @@ One declarative DataFrame job replacing the reference's poll/claim/process
 daemon (workers/ocr/main.py:220-255). Stages (SURVEY.md §3.1):
 
     documents ──anti-join lineage──> pending
-    pending ──posexplode spans──> span rows
+    pending ──explode spans──> span rows
         ├─ kind='text'  ──────────────────────────┐
         └─ kind='media' ─join media blobs─ repartition(xxhash64(doc_id,offset))
                           ─mapInPandas OCR─ split ok/failures
-                                              │            └─> failures table
-    text ∪ ok ──groupBy doc_id, array_sort(collect_list)──> output docs
-    output ──> output table, lineage table, checkpoint metrics
+                                              │            └─> failures
+    text ∪ OCR'd media ──groupBy doc_id, array_sort(collect_list)──> output
+    output ─anti-join failed docs─> committed ──> ocr_output, lineage
+    ok spans of committed docs ──> ocr_json;  ok spans ──> checkpoint
 
 Plan properties to preserve at 100 TB (verify with .explain("formatted")):
-- the media-blob join is a plain shuffled hash join on media_ref (both sides
+- the media-blob join is a plain shuffled join on media_ref (both sides
   big); if the media table is bucketed by media_ref the shuffle disappears;
 - filters on span.kind reach the scan via generator pushdown after explode;
-- only ONE wide shuffle carries image bytes (the explicit repartition before
-  the UDF); the reassembly groupBy shuffles text-only rows;
+- image bytes cross TWO wide shuffles: the media side of the blob join and
+  the xxhash64(doc_id, offset) repartition before the UDF (see
+  run_extraction for why the second one pays); the reassembly groupBy
+  shuffles text-only rows — 4 exchanges in all over pre-materialized input;
 - AQE handles post-UDF partition coalescing and skew-join splitting.
 """
 
 from __future__ import annotations
 
 import time
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from .operators.metrics import checkpoint_rows
 from .operators.ocr_udf import ocr_media_spans
@@ -40,11 +42,12 @@ from .sources import tables
 
 @dataclass
 class PipelineResult:
-    output: DataFrame
-    failures: DataFrame
-    lineage: DataFrame
-    ocr_all: DataFrame
-    stats: dict = field(default_factory=dict)
+    output: DataFrame  # every pending doc; dead-lettered spans keep text=null
+    committed: DataFrame  # output minus the docs with >=1 failed span
+    failures: DataFrame  # dead-letter rows (schemas.FAILURES)
+    failed_docs: DataFrame  # distinct doc_id of failures
+    lineage: DataFrame  # one row per committed doc: the resume marker
+    ocr_all: DataFrame  # every OCR'd media span, ok or failed
 
 
 def run_extraction(
@@ -53,21 +56,10 @@ def run_extraction(
     media: DataFrame,
     lineage: DataFrame | None = None,
     num_partitions: int | None = None,
-    explicit_repartition: bool = True,
 ) -> PipelineResult:
     """Build (lazily) the full extraction DAG. Caller materializes via
     write_run / collect. ``lineage`` (previous runs' done docs) enables
-    resume.
-
-    explicit_repartition: hash-spread span work units (xxhash64(doc_id,
-    offset)) to num_partitions before the OCR UDF. Default ON, and the
-    reason is AQE: AQE sizes post-shuffle partitions by BYTES (64 MB
-    advisory), but the OCR UDF is COMPUTE-bound — on a corpus of small
-    images AQE coalesces the media-join output to a handful of partitions
-    and strangles the UDF (measured 42 s -> 18 s at local[32] with a
-    calibrated compute-bound stub when the explicit repartition pins the
-    partition count). Turn OFF only for decode-light/IO-bound passes where
-    the extra shuffle of image bytes (~25-35% of wall) isn't paid back."""
+    resume."""
     # 4 tasks per slot: per-image cost varies 10-20x (NO_TILE page vs a
     # 30k-px webtoon), so 1 task/slot lets one slow partition gate the whole
     # stage (measured 2.3x run-to-run variance at local[32]); finer tasks
@@ -85,8 +77,12 @@ def run_extraction(
         media.select("media_ref", "content"), "media_ref", "left"
     )
 
-    distributed = repartition_spans(with_bytes, n) if explicit_repartition else with_bytes
-    ocr_results = ocr_media_spans(distributed)
+    # AQE sizes post-shuffle partitions by BYTES (64 MB advisory), but the
+    # OCR UDF is COMPUTE-bound: on a corpus of small images AQE coalesces the
+    # media-join output to a handful of partitions and strangles the UDF.
+    # Pinning the partition count here measured 42 s -> 18 s at local[32]
+    # with a calibrated compute-bound stub.
+    ocr_results = ocr_media_spans(repartition_spans(with_bytes, n))
     _, failures = split_failures(ocr_results)
 
     # ALL media spans (failed ones keep text=null) re-enter the document so
@@ -94,13 +90,19 @@ def run_extraction(
     assembled = reassemble(
         text_spans, ocr_results.select("doc_id", "offset", "media_ref", "text")
     )
-    # docs with a failed span stay OUT of lineage -> the next run's anti-join
-    # retries them (reference retryable-failure semantics, main.py:236-242)
-    lineage_out = build_lineage(assembled, failures)
+    # Only fully-successful docs are committed: output-exists <=> lineage-row,
+    # exactly the reference's skip rule (main.py:107-120 skips iff the output
+    # object exists; failed jobs stay retryable, main.py:236-242). Docs with
+    # >=1 dead-lettered span stay out of lineage, so the next run's anti-join
+    # retries them.
+    failed_docs = failures.select("doc_id").distinct()
+    committed = assembled.join(failed_docs, "doc_id", "left_anti")
     return PipelineResult(
         output=assembled,
+        committed=committed,
         failures=failures,
-        lineage=lineage_out,
+        failed_docs=failed_docs,
+        lineage=build_lineage(committed),
         ocr_all=ocr_results,
     )
 
@@ -115,9 +117,15 @@ def write_run(
 ) -> dict:
     """Materialize one (resumable) run into the warehouse directory.
 
-    Reads existing lineage for the anti-join; appends output/lineage/
-    failures as immutable snapshots; writes per-partition checkpoint rows.
-    Returns run stats.
+    Reads existing lineage for the anti-join, then appends the committed
+    docs, the dead-letter rows, per-partition checkpoint rows, the
+    reference-shaped JSON output docs and, last, their lineage rows, each
+    as an immutable snapshot. Returns run stats.
+
+    lineage goes last because it is the resume marker: a crash before it
+    leaves the run's docs pending, and the rerun writes every table for
+    them again. The rows both attempts appended resolve latest-wins by key
+    (doc_id for ocr_output), as after force=True below.
 
     force=True skips the lineage anti-join and reprocesses everything —
     the reference's `--force` reprocess flag (enqueue.py / main.py:107:
@@ -136,45 +144,30 @@ def write_run(
         spark, documents, media, lineage=prior, num_partitions=num_partitions
     )
 
-    # Cache the OCR stage (the expensive part) so reassembly, metrics and
-    # the failure split all reuse it instead of re-running the UDF.
+    # Cache the OCR stage (the expensive part). Every table below derives
+    # from res.ocr_all, and Spark's cache manager substitutes the cached
+    # plan into each of them, so the UDF runs once.
     t0 = time.time()
-    ocr_cached = res.ocr_all.persist()
-    ocr_cached.count()  # materialize the OCR work under the timer
+    res.ocr_all.persist().count()  # materialize the OCR work under the timer
     wall = time.time() - t0
 
-    ok, failures = split_failures(ocr_cached)
-    assembled = reassemble(
-        explode_spans(pending_documents(documents, prior)).filter(
-            F.col("kind") == "text"
-        ),
-        ocr_cached.select("doc_id", "offset", "media_ref", "text"),
-    )
-    # Only fully-successful docs are committed: output-exists <=> lineage-row,
-    # exactly the reference's skip rule (main.py:107-120 skips iff the output
-    # object exists; failed jobs stay retryable, main.py:236-242). Docs with
-    # >=1 dead-lettered span are retried by the next run's anti-join.
-    completed = assembled.join(
-        failures.select("doc_id").distinct(), "doc_id", "left_anti"
-    ).persist()
-    n_docs = completed.count()
-    n_failed = failures.select("doc_id").distinct().count()
+    n_docs = res.committed.persist().count()  # feeds ocr_output and lineage
+    n_failed = res.failed_docs.count()
+    ok, _ = split_failures(res.ocr_all)
+    # ocr_json: the per-page upload payload the reference puts to R2 per job
+    # (F13), restricted to committed docs so a failed doc's pages are written
+    # only by the run that commits it.
+    ok_committed = ok.join(res.failed_docs, "doc_id", "left_anti")
 
-    tables.append_snapshot(completed, warehouse, "ocr_output")
-    tables.append_snapshot(build_lineage(completed), warehouse, "lineage")
-    tables.append_snapshot(failures, warehouse, "failures")
+    tables.append_snapshot(res.committed, warehouse, "ocr_output")
+    tables.append_snapshot(res.failures, warehouse, "failures")
     tables.append_snapshot(checkpoint_rows(ok, wall), warehouse, "checkpoint")
-    # per-page reference-shaped JSON output docs (F13) — the upload payload
-    # the reference puts to R2 per job. Restricted to committed docs so the
-    # ocr_json table stays exactly-once under the retry semantics above.
-    ok_committed = ok.join(
-        failures.select("doc_id").distinct(), "doc_id", "left_anti"
-    )
     tables.append_snapshot(
         serialize_output_documents(build_output_documents(ok_committed)),
         warehouse,
         "ocr_json",
     )
-    completed.unpersist()
-    ocr_cached.unpersist()
+    tables.append_snapshot(res.lineage, warehouse, "lineage")
+    res.committed.unpersist()
+    res.ocr_all.unpersist()
     return {"docs": n_docs, "failed_docs": n_failed, "wall_seconds": wall}

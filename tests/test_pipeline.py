@@ -167,3 +167,64 @@ def test_force_reprocesses_done_docs(spark, tmp_path):
     assert write_run(spark, ddf, mdf, wh)["docs"] == 0  # resume skips
     # --force semantics: reprocess despite lineage (reference enqueue --force)
     assert write_run(spark, ddf, mdf, wh, force=True)["docs"] == 6
+
+
+class _InjectedCrash(RuntimeError):
+    pass
+
+
+@pytest.fixture(scope="module")
+def crash_corpus():
+    # 10 docs, 23 media spans, 2 corrupt blobs in 2 docs
+    return datagen.generate_corpus(n_docs=10, seed=3, corrupt_fraction=0.1)
+
+
+@pytest.mark.parametrize("k", [1, 2, 3, 4, 5])
+def test_crash_at_kth_commit_then_rerun_repairs(
+    spark, crash_corpus, tmp_path, monkeypatch, k
+):
+    """write_run dies on its k-th table append; a clean rerun must leave
+    every table consistent: each lineage doc (the resume marker) has its
+    ocr_json rows, latest-wins ocr_output matches the golden, and docs with
+    a corrupt blob are never committed."""
+    docs, media = crash_corpus
+    docs_df = spark.createDataFrame(docs, schema=schemas.DOCUMENTS)
+    media_df = spark.createDataFrame(media, schema=schemas.MEDIA)
+    wh = str(tmp_path / "wh_crash")
+
+    append = tables.append_snapshot
+    calls = []
+
+    def crashing_append(df, root, name, *args, **kwargs):
+        calls.append(name)
+        if len(calls) == k:
+            raise _InjectedCrash(name)
+        return append(df, root, name, *args, **kwargs)
+
+    monkeypatch.setattr(tables, "append_snapshot", crashing_append)
+    with pytest.raises(_InjectedCrash):
+        write_run(spark, docs_df, media_df, wh)
+    monkeypatch.setattr(tables, "append_snapshot", append)
+    spark.catalog.clearCache()  # the crashed run never unpersisted its frames
+    write_run(spark, docs_df, media_df, wh)
+
+    expected, _ = golden.golden_output(docs, media, StubEngine())
+    bad = failing_doc_ids(crash_corpus)
+    assert bad
+    lineage = {r["doc_id"] for r in tables.read_table(spark, wh, "lineage").collect()}
+    assert lineage == set(expected) - bad
+
+    ocr_json = {
+        (r["doc_id"], r["offset"])
+        for r in tables.read_table(spark, wh, "ocr_json").collect()
+    }
+    assert ocr_json == {
+        (d["doc_id"], s["offset"])
+        for d in docs
+        if d["doc_id"] in lineage
+        for s in d["spans"]
+        if s["kind"] == "media"
+    }
+
+    latest = tables.read_table_latest(spark, wh, "ocr_output", keys=["doc_id"])
+    assert collect_spans(latest) == {d: expected[d] for d in lineage}

@@ -38,6 +38,45 @@ def test_incremental_two_triggers(spark, tmp_path):
     assert lin.groupBy("doc_id").count().filter(F.col("count") > 1).count() == 0
 
 
+def test_incremental_commits_like_batch(spark, tmp_path):
+    """Each micro-batch commits through write_run: a doc with a corrupt blob
+    is dead-lettered and left uncommitted, and the committed docs get their
+    ocr_json and checkpoint rows as in the batch mode."""
+    from chapterbridge_ocr_worker_spark import golden
+    from chapterbridge_ocr_worker_spark.engine.stub import StubEngine
+
+    docs, media = datagen.generate_corpus(n_docs=10, seed=3, corrupt_fraction=0.1)
+    _, errors = golden.golden_output(docs, media, StubEngine())
+    bad = {
+        d["doc_id"]
+        for d in docs
+        if any(s["kind"] == "media" and s["media_ref"] in errors for s in d["spans"])
+    }
+    assert bad
+    good = {d["doc_id"] for d in docs} - bad
+    media_df = spark.createDataFrame(media, schema=schemas.MEDIA)
+    docs_dir = str(tmp_path / "docs_in")
+    wh = str(tmp_path / "wh")
+    spark.createDataFrame(docs, schema=schemas.DOCUMENTS).coalesce(1).write.parquet(
+        docs_dir
+    )
+    run_incremental(spark, docs_dir, media_df, wh, str(tmp_path / "ckpt"))
+
+    def ids(name):
+        return {r["doc_id"] for r in tables.read_table(spark, wh, name).collect()}
+
+    assert ids("failures") == bad
+    assert ids("ocr_output") == good
+    assert ids("lineage") == good
+    with_media = {
+        d["doc_id"] for d in docs if any(s["kind"] == "media" for s in d["spans"])
+    }
+    assert ids("ocr_json") == good & with_media
+    ckpt = tables.read_table(spark, wh, "checkpoint")
+    assert ckpt.filter(F.col("status") == "success").count() > 0
+    assert ckpt.agg(F.sum("doc_count")).first()[0] >= len(good & with_media)
+
+
 def test_windowed_append_watermark_drops_late_rows(spark, tmp_path):
     """Watermarked append mode: finalized windows emit exactly once; a row
     arriving behind the watermark is dropped, not merged into an
