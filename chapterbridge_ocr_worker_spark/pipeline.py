@@ -20,7 +20,12 @@ Plan properties to preserve at 100 TB (verify with .explain("formatted")):
 - image bytes cross TWO wide shuffles: the media side of the blob join and
   the xxhash64(doc_id, offset) repartition before the UDF (see
   run_extraction for why the second one pays); the reassembly groupBy
-  shuffles text-only rows — 4 exchanges in all over pre-materialized input;
+  shuffles text-only rows — 4 exchanges in all over pre-materialized input
+  (run_extraction's DAG, the 4 that test_extraction_shuffle_budget pins);
+- a write_run commit the planner sizes under 1 MB per core adds one
+  rebalance exchange (tables.append_snapshot writes it as one right-sized
+  file); `content` never reaches a commit, so these move OCR text and
+  ids, not images;
 - AQE handles post-UDF partition coalescing and skew-join splitting.
 """
 

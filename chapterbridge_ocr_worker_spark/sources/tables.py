@@ -10,7 +10,11 @@ Scale notes baked in:
 - documents/media/output are written partitioned or bucketed by hash of the
   key they're joined/grouped on, so re-reads co-locate;
 - appends use unique subdirectories per job run (Iceberg snapshot analogue)
-  so a killed job never corrupts previous commits — resume reads the union.
+  so a killed job never corrupts previous commits — resume reads the union;
+- a commit the planner sizes as small is an "optimized write"
+  (Iceberg/Delta): rebalanced to AQE's measured size, so it lands as one
+  file, not one per partition the frame arrived with; a larger commit is
+  written as laid out and pays no exchange.
 """
 
 from __future__ import annotations
@@ -151,6 +155,18 @@ def write_table(df: DataFrame, root: str, name: str, mode: str = "overwrite") ->
     return path
 
 
+# AQE's default coalescePartitions.minPartitionSize: the smallest partition
+# AQE coalesces a rebalance down to, so the smallest file it writes
+_MIN_FILE_BYTES = 1 << 20
+
+
+def _planned_bytes(df: DataFrame) -> int:
+    """The optimizer's size estimate of ``df``: Spark's plan statistics (the
+    data size of local and materialized cached relations, file bytes for
+    scans) carried up through the operators above them."""
+    return df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+
+
 def _json_safe_stat(v):
     """min/max values must survive a JSON round-trip; anything exotic
     (timestamps, decimals) degrades to its string form — consistent on
@@ -176,6 +192,20 @@ def append_snapshot(
     manifest read-modify-write runs under _manifest_lock so no commit can
     drop another writer's snapshot.
 
+    FILE SIZING: a frame the planner sizes at most one 1 MB file per core
+    (defaultParallelism x 1 MB) is written through a REBALANCE hint, one
+    round-robin exchange whose partitions AQE coalesces (and splits when
+    oversized) from measured shuffle bytes, targeting
+    max(minPartitionSize 1 MB, min(advisoryPartitionSizeInBytes 64 MB,
+    total / defaultParallelism)) per file. A commit of a few KB is one
+    file instead of one per upstream partition, and every later read of
+    the table (resume anti-joins, compaction) opens that many fewer. A
+    bigger frame is written as laid out: the exchange would cost a full
+    shuffle and sort of it, which grows with the frame while the files it
+    saves do not. A frame passed with ``file_stats_cols`` is always
+    written as laid out: its caller built the per-file layout on purpose
+    (write_table_zordered's range partitions).
+
     ``stats_cols``: record per-snapshot min/max of these columns in the
     manifest (the Iceberg manifest-file column-stats analogue). The stats
     are aggregated from the just-written parquet — a footer-stats-backed
@@ -197,6 +227,9 @@ def append_snapshot(
     # a legacy (manifest-less) table must not mistake this uncommitted data
     # for a committed snapshot, and listings/GC skip dotted dirs
     inflight = os.path.join(path, f".inflight-{snap_name}")
+    small = df.sparkSession.sparkContext.defaultParallelism * _MIN_FILE_BYTES
+    if not file_stats_cols and _planned_bytes(df) <= small:
+        df = df.hint("rebalance")
     df.write.mode("overwrite").parquet(inflight)
     snap_stats = None
     if stats_cols:
@@ -580,15 +613,16 @@ def compact_table(
     spark: SparkSession,
     root: str,
     name: str,
-    target_files: int | None = None,
     keys: list[str] | None = None,
     fold=None,
 ) -> dict:
     """Rewrite all of a table's snapshots into one compacted snapshot —
     the Iceberg `rewrite_data_files` analogue. Every append_snapshot adds a
-    directory with shuffle-partition-count files, so a long-running
-    incremental pipeline accumulates thousands of small files and every
-    read pays the listing + open cost; compaction restores big-file scans.
+    directory, so a long-running incremental pipeline accumulates
+    thousands of snapshots (small ones, for weekly slices) and every read
+    pays the listing + open cost; compaction restores one directory of
+    big-file scans. The output is rebalanced to AQE's measured size (see
+    append_snapshot), so a small table compacts to one file.
 
     ``keys``: compaction MERGES snapshots, which destroys the per-snapshot
     provenance read_table_latest's latest-wins depends on. For tables that
@@ -672,12 +706,11 @@ def compact_table(
         return empty
     if fold is not None:
         df = fold(df)
-    target = target_files or max(1, spark.sparkContext.defaultParallelism)
     # write the compacted snapshot WITHOUT registering it: a reader during
     # this window still unions exactly the old live set
     snap_name = f"snap-{int(time.time() * 1000)}-{uuid.uuid4().hex[:8]}"
     new_snap = os.path.join(path, snap_name)
-    df.repartition(target).write.mode("overwrite").parquet(new_snap)
+    df.hint("rebalance").write.mode("overwrite").parquet(new_snap)
     with _manifest_lock(path):
         # CAS-style commit: keep snapshots appended while we were rewriting
         now_live = _live_snapshots(path)

@@ -80,23 +80,111 @@ def test_compact_table_preserves_rows(spark, tmp_path):
     docs, media = datagen.generate_corpus(n_docs=12, seed=41, corrupt_fraction=0.0)
     mdf = spark.createDataFrame(media, schema=schemas.MEDIA)
     wh = str(tmp_path / "wh_compact")
-    # two runs -> two snapshot dirs per table, many small files
-    write_run(spark, spark.createDataFrame(docs[:6], schema=schemas.DOCUMENTS), mdf, wh)
-    write_run(spark, spark.createDataFrame(docs, schema=schemas.DOCUMENTS), mdf, wh)
+    # three runs over growing prefixes -> three snapshot dirs per table, one
+    # right-sized file each
+    for n in (4, 8, len(docs)):
+        write_run(
+            spark, spark.createDataFrame(docs[:n], schema=schemas.DOCUMENTS), mdf, wh
+        )
     before = tables.read_table(spark, wh, "ocr_output")
     rows_before = {r["doc_id"] for r in before.select("doc_id").collect()}
 
-    stats = tables.compact_table(spark, wh, "ocr_output", target_files=2)
-    assert stats["snapshots_before"] == 2
+    stats = tables.compact_table(spark, wh, "ocr_output")
+    assert stats["snapshots_before"] == 3
     assert stats["files_after"] <= 2 < stats["files_before"]
 
     after = tables.read_table(spark, wh, "ocr_output")
     assert {r["doc_id"] for r in after.select("doc_id").collect()} == rows_before
     assert after.count() == 12
     # resume still works against the compacted lineage
-    tables.compact_table(spark, wh, "lineage", target_files=1)
+    tables.compact_table(spark, wh, "lineage")
     s = write_run(spark, spark.createDataFrame(docs, schema=schemas.DOCUMENTS), mdf, wh)
     assert s["docs"] == 0
+
+
+def test_append_small_frame_is_one_file(spark, tmp_path):
+    """A commit's file count follows its bytes, not the partition count the
+    frame arrives with: 100 rows over 16 partitions land as one file, with
+    the frame's rows and min/max stats."""
+    import os
+
+    root = str(tmp_path)
+    df = spark.range(0, 100, 1, 16).select(
+        F.col("id").alias("doc_id"), (F.col("id") * 2).alias("v")
+    )
+    snap = tables.append_snapshot(df, root, "t", stats_cols=["doc_id"])
+    assert [s["n_files"] for s in tables.list_snapshots(root, "t")] == [1]
+    got = tables.read_table(spark, root, "t").collect()
+    assert sorted((r["doc_id"], r["v"]) for r in got) == [
+        (i, 2 * i) for i in range(100)
+    ]
+    m = tables._read_manifest(tables.table_path(root, "t"))
+    assert m["column_stats"] == {os.path.basename(snap): {"doc_id": [0, 99]}}
+
+
+def test_compact_small_table_is_one_file(spark, tmp_path):
+    """Compaction sizes its output like an append: a small table compacts
+    to one file, not one per core."""
+    root = str(tmp_path)
+    for lo in (0, 100, 200):
+        tables.append_snapshot(spark.range(lo, lo + 100, 1, 16), root, "t")
+    stats = tables.compact_table(spark, root, "t")
+    assert (stats["snapshots_before"], stats["files_after"]) == (3, 1)
+    assert sorted(r["id"] for r in tables.read_table(spark, root, "t").collect()) == (
+        list(range(300))
+    )
+
+
+def test_append_empty_frame_keeps_schema(spark, tmp_path):
+    """A clean run appends an empty failures frame: the snapshot must read
+    back with the table's schema and no rows."""
+    from chapterbridge_ocr_worker_spark import schemas
+
+    root = str(tmp_path)
+    empty = spark.createDataFrame([], schema=schemas.FAILURES)
+    tables.append_snapshot(empty, root, "failures")
+    got = tables.read_table(spark, root, "failures")
+    assert got.count() == 0
+    assert [(f.name, f.dataType) for f in got.schema] == [
+        (f.name, f.dataType) for f in schemas.FAILURES
+    ]
+
+
+def test_append_large_frame_is_size_bounded(spark, tmp_path):
+    """The rebalance is bounded by AQE's advisory size, not a coalesce(1):
+    with a 1 MB advisory an ~8 MB append (which the planner, costing each
+    string at 20 bytes, sizes under 1 MB per core) splits into files of
+    about 1 MB (the default 64 MB advisory writes it as defaultParallelism
+    files)."""
+    key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "1m")
+    try:
+        # 32k rows x 256 hex chars: ~8 MB that LZ4 barely compresses
+        df = spark.range(0, 32768, 1, 8).select(
+            "id",
+            F.concat(
+                *[F.sha2(F.concat(F.col("id"), F.lit(str(i))), 256) for i in range(4)]
+            ).alias("pad"),
+        )
+        root = str(tmp_path)
+        tables.append_snapshot(df, root, "big")
+        (snap,) = tables.list_snapshots(root, "big")
+        assert snap["n_files"] >= 8
+        assert tables.read_table(spark, root, "big").count() == 32768
+    finally:
+        spark.conf.set(key, old)
+
+
+def test_append_planned_large_frame_keeps_layout(spark, tmp_path):
+    """A frame the planner sizes above one 1 MB file per core is written as
+    laid out, one file per partition: a rebalance would shuffle and sort
+    all of it to save files that are not small."""
+    root = str(tmp_path)
+    df = spark.range(0, 1 << 20, 1, 8).select("id", (F.col("id") * 2).alias("v"))
+    tables.append_snapshot(df, root, "t")
+    assert [s["n_files"] for s in tables.list_snapshots(root, "t")] == [8]
+    assert tables.read_table(spark, root, "t").count() == 1 << 20
 
 
 def test_compact_crash_window_never_duplicates(spark, tmp_path):
@@ -117,7 +205,7 @@ def test_compact_crash_window_never_duplicates(spark, tmp_path):
     df.write.mode("overwrite").parquet(orphan)
     assert tables.read_table(spark, root, "t").count() == 2  # NOT 4
 
-    stats = tables.compact_table(spark, root, "t", target_files=1)
+    stats = tables.compact_table(spark, root, "t")
     assert stats["snapshots_before"] == 1
     assert tables.read_table(spark, root, "t").count() == 2
     assert not os.path.isdir(orphan)  # orphan collected
@@ -213,7 +301,7 @@ def test_compact_with_keys_preserves_latest_wins(spark, tmp_path):
     before = tables.read_table_latest(spark, root, "t", keys=["id"])
     assert {(r["id"], r["v"]) for r in before.collect()} == want
 
-    stats = tables.compact_table(spark, root, "t", target_files=1, keys=["id"])
+    stats = tables.compact_table(spark, root, "t", keys=["id"])
     assert stats["snapshots_before"] == 2
     after = tables.read_table_latest(spark, root, "t", keys=["id"])
     assert {(r["id"], r["v"]) for r in after.collect()} == want
@@ -233,7 +321,7 @@ def test_compact_without_keys_refuses_latest_wins_readers(spark, tmp_path):
     tables.append_snapshot(spark.createDataFrame([(1, "old")], ["id", "v"]), root, "t")
     _time.sleep(0.01)
     tables.append_snapshot(spark.createDataFrame([(1, "new")], ["id", "v"]), root, "t")
-    tables.compact_table(spark, root, "t", target_files=1)
+    tables.compact_table(spark, root, "t")
     assert tables.read_table(spark, root, "t").count() == 2  # union kept
     with pytest.raises(RuntimeError, match="compacted"):
         tables.read_table_latest(spark, root, "t", keys=["id"])
@@ -289,7 +377,7 @@ def test_append_adopts_legacy_toplevel_files(spark, tmp_path):
     }
     assert got == {1: "new", 2: "b", 3: "c"}
     # compaction preserves everything (no data-deleting legacy GC)
-    stats = tables.compact_table(spark, root, "t", target_files=1, keys=["id"])
+    stats = tables.compact_table(spark, root, "t", keys=["id"])
     assert stats["legacy_files_adopted"] == 0  # adopted at append time
     got2 = {
         r["id"]: r["v"]
@@ -316,7 +404,7 @@ def test_compact_adopts_legacy_toplevel_files(spark, tmp_path):
     m = json.load(open(os.path.join(path, "_live_snapshots.json")))
     assert len(m["snapshots"]) == 1
     assert tables.read_table(spark, root, "t").count() == 1  # rows stranded
-    stats = tables.compact_table(spark, root, "t", target_files=1)
+    stats = tables.compact_table(spark, root, "t")
     assert stats["legacy_files_adopted"] >= 1
     assert tables.read_table(spark, root, "t").count() == 3  # recovered
     assert not any(
@@ -559,6 +647,12 @@ def test_zorder_prunes_nonleading_dimension(spark, tmp_path):
     preds = {"y": (0, 7)}  # 1/8 of the y range, all of x
     zsel = tables.pruned_selection(tables.table_path(root, "zgrid"), preds)
     xsel = tables.pruned_selection(tables.table_path(root, "xgrid"), preds)
+    # frames with file stats are written as laid out: one file per range
+    # partition, each with its stats (append_snapshot does not rebalance them)
+    (zfiles,) = tables._read_manifest(tables.table_path(root, "zgrid"))[
+        "file_stats"
+    ].values()
+    assert zsel["files_total"] == len(zfiles) == 16
     assert zsel["files_kept"] < zsel["files_total"] / 2
     assert xsel["files_kept"] == xsel["files_total"]
     # pruning never changes answers
